@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.graftutil.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
@@ -291,25 +290,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle/broadcast state is cleaned by the ContextCleaner, which is
-      // GC-triggered — on a 32g driver heap that never GCs, hundreds of
-      // registered shuffles accumulate and the session slows down
-      // minutes in; force the cleanup cycle
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // shuffle to tmpfs: this VM's /tmp disk has multi-second writeback
-      // stalls that turned the shuffle-heaviest query bimodal (2s vs 50s
-      // runs); RAM-backed local dirs take the disk out of the measurement
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     // the between-run teardown unpersists localCheckpointed RDDs, and
     // RDD.unpersist WARNs once per truncated-lineage RDD — hundreds of
@@ -318,7 +299,6 @@ object Bench {
     // references the previous run's results), so silence the rdd logger.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    Graft.init(spark)
 
     // per-stage timing capture (SPARK_GRAFT_BENCH_STAGES=0 disables): the
     // listener is always cheap; the dump below only fires for runs >3x the

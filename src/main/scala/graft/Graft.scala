@@ -4,10 +4,48 @@ import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 
 import graft.functions.{CosineSimilarity, Fingerprint64, Simhash60}
 
-/** Session bootstrap: registers graft's native Catalyst functions so they
-  * are usable both as Columns and from `spark.sql`. Idempotent and cheap —
-  * every public entry point calls it. */
+/** Session factory and bootstrap: [[session]] is the one place a graft
+  * `SparkSession` is built and sized; [[init]] registers graft's native
+  * Catalyst functions so they are usable both as Columns and from
+  * `spark.sql`. */
 object Graft {
+
+  /** Worker threads for a local session: `SPARK_GRAFT_CPUS` when set,
+    * else every processor the JVM sees — defaults follow the host. */
+  private def hostThreads: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The local session every graft main (and the test suite) runs on:
+    * `local[threads]` with one shuffle partition per thread, then
+    * [[init]]. The settings it pins:
+    *  - `nanosAsLong`: fixtures have shipped TIMESTAMP(NANOS) columns
+    *    (`Tables.load` normalizes them; harmless on micros fixtures);
+    *  - UTC session time zone, so results do not follow the host's;
+    *  - a 1-min periodic GC: the ContextCleaner that frees shuffle and
+    *    broadcast state is GC-triggered and never fires on a large quiet
+    *    heap, so a long session's tail queries crawl without it;
+    *  - `spark.local.dir` on tmpfs (`SPARK_GRAFT_LOCAL_DIR` overrides):
+    *    /tmp disk writeback stalls made the shuffle-heaviest query
+    *    bimodal (2 s vs 50 s runs);
+    *  - no UI. */
+  def session(threads: Int = hostThreads,
+      warehouseDir: Option[String] = None): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$threads]")
+      .config("spark.sql.shuffle.partitions", threads.toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.cleaner.periodicGC.interval", "1min")
+      .config("spark.local.dir",
+        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
+      .config("spark.ui.enabled", "false")
+    val spark = warehouseDir
+      .fold(b)(b.config("spark.sql.warehouse.dir", _)).getOrCreate()
+    init(spark)
+    spark
+  }
+
+  /** Idempotent and cheap — every public entry point calls it. */
   def init(spark: SparkSession): Unit = {
     GraftSqlBridge.registerFunction(spark, "cosine_sim",
       exprs => CosineSimilarity(exprs(0), exprs(1)))

@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Quick diagnostic main: exercises the session bootstrap, the SQL-function
   * registration path, edge cases, and the flagship entry. Dev tool — the
   * driver gates are Verify (correctness) and Bench (perf). */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Graft.init(spark)
     Tables.registerAll(spark, sfDir)
 
     println("[smoke] cosine_sim from SQL:")

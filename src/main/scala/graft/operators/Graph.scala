@@ -165,8 +165,6 @@ object Graph {
               lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
       }
       ranks = ranks.select(col("node"), col("rank"))
-      if (sys.env.contains("SPARK_GRAFT_GRAPH_EXPLAIN"))
-        ranks.explain("formatted") // dev hook: the pre-checkpoint loop plan
       // pin the result before unpersisting the adjacency it derives
       // from; deg/reset checkpoint blocks are likewise dead once the
       // result is materialized — free them eagerly instead of leaving

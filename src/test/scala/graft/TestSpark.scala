@@ -2,22 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM). Fixed at 4
+  * threads, not the host's count, so results do not vary with the host. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      // keep the GC-triggered ContextCleaner alive across a long suite
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session(threads = 4,
+      warehouseDir = Some("/tmp/graft_test_warehouse"))
     s.sparkContext.setLogLevel("WARN")
-    Graft.init(s)
     s
   }
   val sfDir = "/root/testdata/sf0.001"
