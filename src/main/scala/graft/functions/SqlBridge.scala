@@ -5,6 +5,7 @@
  * Spark internals are modified. */
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 object GraftSqlBridge {
@@ -14,11 +15,14 @@ object GraftSqlBridge {
   /** Extract the Catalyst Expression backing a Column. */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Register an Expression builder as a SQL-callable temp function. */
+  /** Register an Expression builder as a SQL-callable temp function,
+    * once: registering it again would replace it and log a warning. */
   def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
 
   /** Unpersist the block storage behind a `localCheckpoint`ed Dataset.
     * `Dataset.unpersist` only talks to the cache manager; a local

@@ -31,16 +31,16 @@ object Conditions {
       .join(broadcast(segments), pmod(col("vec_id"), lit(5)) === col("seg_idx"))
       .select(col("vec_id").as("camp"), lit("c_mktsegment").as("name"),
         col("seg_val").as("value"), col("score").as("w"))
+    // Both ranges of a campaign from one read of top5.
     val intConds = top5.select(col("vec_id").as("camp"),
         lit("o_totalprice").as("name"),
-        (col("vec_id") * 500L).as("lo"),
-        (col("vec_id") * 500L + 200000L).as("hi"),
+        explode(array(
+          struct((col("vec_id") * 500L).as("lo"),
+            (col("vec_id") * 500L + 200000L).as("hi")),
+          struct((col("vec_id") * 300L + 50000L).as("lo"),
+            (col("vec_id") * 300L + 250000L).as("hi")))).as("r"),
         col("score").as("w"))
-      .union(top5.select(col("vec_id"),
-        lit("o_totalprice"),
-        (col("vec_id") * 300L + 50000L),
-        (col("vec_id") * 300L + 250000L),
-        col("score")))
+      .select(col("camp"), col("name"), col("r.lo"), col("r.hi"), col("w"))
     (strConds, intConds)
   }
 

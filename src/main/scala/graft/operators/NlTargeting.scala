@@ -9,9 +9,9 @@ import graft.{Graft, IndexBuild, Embeddings}
   *
   * Pipeline: per extracted (attribute, polarity, value) triple, build the
   * query sentence (F7), embed it, similarity-search the condition index
-  * keeping the best hit per condition above the floor (P6+A1), group the
-  * matched codes per (attribute, polarity) (A10), then subtract negated
-  * codes from positive ones (SET3,
+  * keeping the hits above the floor (P6+A1), group the matched codes per
+  * (attribute, polarity) (A10), then subtract negated codes from positive
+  * ones (SET3,
   * `/root/reference/nl_targeting.py:112-123`).
   *
   * The LLM extraction/refinement steps (L1-L3) sit OUTSIDE this operator —
@@ -146,7 +146,15 @@ object NlTargeting {
       .otherwise("")
   }
 
-  /** Per-triple condition search + code grouping + polarity subtraction.
+  /** Per-triple condition search + code grouping + polarity subtraction,
+    * in one pass: one broadcast cross join of the index with the triples;
+    * one cosine floor (coded conditions against the `attr:value` vector,
+    * code-less ones against `attr`, their code being the L2-normalized
+    * value, dropped when empty (P8)); one aggregate per attribute that
+    * collects the positive and negated code sets side by side, so SET3 is
+    * an `array_except` on one row, not a self-join. `collect_set` dedups
+    * codes across triples and routes and no score is returned, so there
+    * is no per-code best score and no `distinct`.
     *
     * @param triples columns `attr: string, polarity: string (긍정|부정),
     *                value: string`
@@ -166,43 +174,24 @@ object NlTargeting {
     val qs = triples.select(col("attr"), col("polarity"), col("value"),
       Embeddings.embedCol(concat_ws(":", col("attr"), col("value")), dim).as("qvec"),
       Embeddings.embedCol(col("attr"), dim).as("avec"))
-    // Coded route — best score per (triple, condition code): A1's
-    // max-per-group over the ≥floor hits. The triple side is tiny —
-    // broadcast; the index scan is one codegen'd pass.
-    val hits = condIndex.filter(col("code_nm") =!= "").crossJoin(broadcast(qs))
-      .select(col("attr"), col("polarity"), col("cond_nm"), col("code_nm"),
-        Graft.cosine(col("cond_vec"), col("qvec")).as("simil"))
-      .filter(col("simil") >= floor)
-      .groupBy(col("attr"), col("polarity"), col("cond_nm"), col("code_nm"))
-      .agg(max(col("simil")).as("best"))
-    // Value route (L2, `/root/reference/nl_targeting.py:62-80`): code-less
-    // conditions match on the attribute alone, then the triple's raw value
-    // is normalized to an operator form; empty normalizations (value does
-    // not fit the condition type) are scrubbed (P8).
-    val valueHits = condIndex.filter(col("code_nm") === "").crossJoin(broadcast(qs))
-      .select(col("attr"), col("polarity"), col("value"), col("cond_type"),
-        Graft.cosine(col("cond_vec"), col("avec")).as("simil"))
-      .filter(col("simil") >= floor)
+    val coded = col("code_nm") =!= ""
+    val hits = condIndex.filter(col("code_nm").isNotNull).crossJoin(broadcast(qs))
+      .filter(Graft.cosine(col("cond_vec"),
+        when(coded, col("qvec")).otherwise(col("avec"))) >= floor)
       .select(col("attr"), col("polarity"),
-        normalizeValue(col("value"), col("cond_type")).as("code_nm"))
-      .filter(col("code_nm") =!= "")
-      .distinct()
-    // A10: dedup'd code set per (attr, polarity) across both routes.
-    val grouped = hits.select(col("attr"), col("polarity"), col("code_nm"))
-      .union(valueHits)
-      .groupBy(col("attr"), col("polarity"))
-      .agg(array_sort(collect_set(col("code_nm"))).as("codes"))
-    // SET3: positive := positive − negative for the same attribute.
-    val pos = grouped.filter(col("polarity") === "긍정")
-      .select(col("attr"), col("codes").as("pos_codes"))
-    val neg = grouped.filter(col("polarity") === "부정")
-      .select(col("attr"), col("codes").as("neg_codes"))
-    val subtracted = pos.join(neg, Seq("attr"), "left_outer")
-      .select(col("attr"), lit("긍정").as("polarity"),
-        array_sort(array_except(col("pos_codes"),
-          coalesce(col("neg_codes"), array()))).as("codes"))
-    subtracted.union(
-        neg.select(col("attr"), lit("부정").as("polarity"), col("neg_codes")))
+        when(coded, col("code_nm"))
+          .otherwise(normalizeValue(col("value"), col("cond_type"))).as("code"))
+      .filter(col("code") =!= "")
+    hits.groupBy(col("attr"))
+      .agg(
+        collect_set(when(col("polarity") === "긍정", col("code"))).as("pos"),
+        collect_set(when(col("polarity") === "부정", col("code"))).as("neg"))
+      .select(col("attr"), explode(array(
+        struct(lit("긍정").as("polarity"),
+          array_sort(array_except(col("pos"), col("neg"))).as("codes")),
+        struct(lit("부정").as("polarity"), array_sort(col("neg")).as("codes"))))
+        .as("t"))
+      .select(col("attr"), col("t.polarity"), col("t.codes"))
       .filter(size(col("codes")) > 0)
   }
 }

@@ -4,12 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Graft.session` is the one place a session is built and sized: no
   * other source calls the builder, no main hard-codes a thread count, and
   * the shared test session carries the factory's settings. Reads sources
-  * and the existing session's conf only — no Spark job. */
+  * and the existing session's conf and registry only — no Spark job. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private def repoRoot: Path = {
@@ -51,5 +52,23 @@ class SessionFactorySpec extends AnyFunSuite {
     ).foreach { case (k, v) => assert(conf.get(k) == v, k) }
     assert(conf.get("spark.sql.warehouse.dir")
       .endsWith("/tmp/graft_test_warehouse"))
+  }
+
+  test("Graft.init registers each function once: a second call leaves " +
+      "the function registry and the optimizer rules unchanged") {
+    val spark = TestSpark.spark
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val names = Seq("cosine_sim", "simhash60", "fingerprint64")
+    def snapshot = (names.map(n =>
+        registry.lookupFunctionBuilder(FunctionIdentifier(n))),
+      registry.listFunction().toSet, spark.experimental.extraOptimizations)
+    Graft.init(spark)
+    val (builders, listed, rules) = snapshot
+    assert(builders.forall(_.isDefined))
+    Graft.init(spark)
+    val (builders2, listed2, rules2) = snapshot
+    builders.zip(builders2).foreach { case (a, b) => assert(a.get eq b.get) }
+    assert(listed2 == listed && rules2 == rules)
   }
 }
