@@ -218,13 +218,6 @@ object Graft {
     () => await(f)
   }
 
-  /** Run every thunk concurrently on the action pool and join in
-    * order. */
-  def inParallelSeq[A](thunks: Seq[() => A]): Seq[A] =
-    thunks.map(t => actionPool.submit(
-      new java.util.concurrent.Callable[A] { def call(): A = t() }))
-      .map(await)
-
   /** Remove a scratch dir created by [[scratchDir]] right now — the
     * caller-side `finally`/failed-build form; the shutdown hook above
     * is only the backstop for paths that never reach their cleanup. */

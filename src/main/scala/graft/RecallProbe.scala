@@ -29,7 +29,7 @@ object RecallProbe {
         println(f"$name%-22s n_hit=$n/10")
       }
 
-      val ivfK = Ann.buildIvfKMeans(e, numCentroids = 32, maxIter = 5)
+      val ivfK = Ann.buildIvfKMeansLloyd(e, numCentroids = 32, maxIter = 5)
       hits("ann_ivf_kmeans_topk", Ann.searchIvf(ivfK,
           q.select(col("qvec")), nprobe = 4, k = 10)
         .select(lit(0L).as("qid"), col("vec_id")))
@@ -43,7 +43,7 @@ object RecallProbe {
           q.select(col("qvec")), k = 10, overfetch = 6)
         .select(lit(0L).as("qid"), col("vec_id")))
 
-      val cbK = Ann.buildPqCodebookKMeans(e, m = 16, ksub = 32, maxIter = 5)
+      val cbK = Ann.buildPqCodebookLloyd(e, m = 16, ksub = 32, maxIter = 5)
       hits("ann_pq_kmeans_topk", Ann.searchPq(e, Ann.pqEncode(e, cbK), cbK,
           q.select(col("qvec")), k = 10, overfetch = 6)
         .select(lit(0L).as("qid"), col("vec_id")))
@@ -56,28 +56,10 @@ object RecallProbe {
 
       val (ivfL, indexL, cbL) = Ann.buildIvfPq(e, numCentroids = 32,
         m = 16, ksub = 32,
-        coarse = Ann.buildIvfKMeans(_, _, _, _, maxIter = 5),
-        codebook = Ann.buildPqCodebookKMeans(_, _, _, _, _, maxIter = 5))
-      hits("ann_ivfpq_kmeans_topk", Ann.searchIvfPq(ivfL, indexL, cbL, e,
-          q.select(col("qvec")), nprobe = 12, k = 10, overfetch = 10)
-        .select(lit(0L).as("qid"), col("vec_id")))
-
-      val ivfLl = Ann.buildIvfKMeansLloyd(e, numCentroids = 32, maxIter = 5)
-      hits("ann_ivf_lloyd(fused)", Ann.searchIvf(ivfLl,
-          q.select(col("qvec")), nprobe = 4, k = 10)
-        .select(lit(0L).as("qid"), col("vec_id")))
-
-      val (ivfF2, indexF2, cbF2) = Ann.buildIvfPq(e, numCentroids = 32,
-        m = 16, ksub = 32,
         coarse = Ann.buildIvfKMeansLloyd(_, _, _, _, maxIter = 5),
         codebook = Ann.buildPqCodebookLloyd(_, _, _, _, _, maxIter = 5))
-      hits("ann_ivfpq_lloyd2(fused)", Ann.searchIvfPq(ivfF2, indexF2, cbF2, e,
+      hits("ann_ivfpq_kmeans_topk", Ann.searchIvfPq(ivfL, indexL, cbL, e,
           q.select(col("qvec")), nprobe = 12, k = 10, overfetch = 10)
-        .select(lit(0L).as("qid"), col("vec_id")))
-
-      val cbLl = Ann.buildPqCodebookLloyd(e, m = 16, ksub = 32, maxIter = 5)
-      hits("ann_pq_lloyd(fused)", Ann.searchPq(e, Ann.pqEncode(e, cbLl), cbLl,
-          q.select(col("qvec")), k = 10, overfetch = 6)
         .select(lit(0L).as("qid"), col("vec_id")))
 
       for (dOut <- Seq(16, 32); of <- Seq(8, 24, 48)) {
@@ -102,14 +84,6 @@ object RecallProbe {
       val cbP = Ann.buildPqCodebookLloyd(er, m = 16, ksub = 32, maxIter = 5)
       hits("ann_pq_pca_topk", Ann.searchPq(er, Ann.pqEncode(er, cbP), cbP,
           qr, k = 10, overfetch = 6)
-        .select(lit(0L).as("qid"), col("vec_id")))
-
-      val (ivfF, indexF, cbF) = Ann.buildIvfPq(e, numCentroids = 32,
-        m = 16, ksub = 32,
-        coarse = Ann.buildIvfKMeans(_, _, _, _, maxIter = 5),
-        codebook = Ann.buildPqCodebookLloyd(_, _, _, _, _, maxIter = 5))
-      hits("ann_ivfpq_lloyd(fused)", Ann.searchIvfPq(ivfF, indexF, cbF, e,
-          q.select(col("qvec")), nprobe = 12, k = 10, overfetch = 10)
         .select(lit(0L).as("qid"), col("vec_id")))
 
       val qsAll = e.filter(col("vec_id") < 5)

@@ -142,7 +142,7 @@ object ScaleProbe {
     def ivfpqBuild(e: DataFrame): Unit = {
       val (_, index, _) = Ann.buildIvfPq(e, numCentroids = 32,
         m = 16, ksub = 32,
-        coarse = Ann.buildIvfKMeans(_, _, _, _, maxIter = 5),
+        coarse = Ann.buildIvfKMeansLloyd(_, _, _, _, maxIter = 5),
         codebook = Ann.buildPqCodebookLloyd(_, _, _, _, _, maxIter = 5))
       index.count()
     }

@@ -92,7 +92,7 @@ object Ann {
     * Retrain policy (spec-pinned on a shifted-append fixture): record
     * `mean_centroid_sim` at build time; when a later reading breaches
     * [[retrainDue]]'s drop tolerance, rebuild the quantizer on the
-    * live corpus ([[buildIvfKMeans]] over `liveAssignments`) and
+    * live corpus ([[buildIvfKMeansLloyd]] over `liveAssignments`) and
     * re-encode — the FAISS re-train counterpart. Appends stay valid
     * meanwhile (results are exact within probed buckets; only WHICH
     * buckets are probed degrades). */
@@ -136,10 +136,11 @@ object Ann {
     *
     * Centroids are the `numCentroids` vectors with the smallest
     * `md5(vec_id)` — a deterministic pseudo-random sample (md5 also exists
-    * in DuckDB, so the whole index is oracle-reproducible; a KMeans fit
-    * would drop in unchanged). The count is FIXED, not proportional to N:
-    * the assignment pass is O(N·C) with a bounded broadcast, never O(N²),
-    * and `orderBy(...).limit(C)` is TakeOrderedAndProject — no global sort.
+    * in DuckDB, so the whole index is oracle-reproducible;
+    * [[buildIvfKMeansLloyd]] is the learned alternative). The count is
+    * FIXED, not proportional to N: the assignment pass is O(N·C) with a
+    * bounded broadcast, never O(N²), and `orderBy(...).limit(C)` is
+    * TakeOrderedAndProject — no global sort.
     * Assignments come back partitioned by centroid_id, so a probe of
     * nprobe buckets touches nprobe/C of the data. */
   def buildIvf(emb: DataFrame, numCentroids: Int = 32,
@@ -151,79 +152,16 @@ object Ann {
     assignToCentroids(emb, centroids, idCol, vecCol)
   }
 
-  /** LEARNED centroids: an MLlib KMeans fit (cosine distance — the same
-    * measure the index assigns and probes by) instead of [[buildIvf]]'s
-    * deterministic row sample. On clustered real embeddings random-row
-    * centroids land several picks inside one dense cluster and none in
-    * sparse ones — unbalanced buckets, degraded recall at fixed nprobe;
-    * KMeans spreads centroids by the data's own density. The md5 sample
-    * stays the ORACLE default (DuckDB-reproducible); this is the quality
-    * path, gated by the recall/balance spec instead.
+  /** LEARNED coarse centroids via a DataFrame-native cosine Lloyd
+    * instead of [[buildIvf]]'s deterministic row sample. On clustered
+    * embeddings random-row centroids land several picks inside one dense
+    * cluster and none in sparse ones — unbalanced buckets, degraded
+    * recall at fixed nprobe; Lloyd rounds spread the centroids by the
+    * data's own density. The md5 sample stays the ORACLE default
+    * (DuckDB-reproducible); this is the quality path, gated by the
+    * recall/balance spec instead.
     *
-    * Scale: the fit is KMeans|| on the distributed frame (no driver
-    * materialization of the data); only the C centers (C·dim doubles)
-    * come to the driver, same bounded footprint as the sample path's
-    * broadcast. The fit input is further bounded two ways, per standard
-    * IVF-training practice (centroid quality saturates at a few hundred
-    * training points per centroid — Lloyd-iterating the full corpus is
-    * wasted passes):
-    *  - `fitFraction` < 1 keeps a deterministic hash slice of the rows
-    *    (xxhash64 threshold on the id — reproducible regardless of
-    *    partitioning, unlike `df.sample`). At 100TB you fit on ~1e-6 of
-    *    the corpus; assignment below still covers every row.
-    *  - `fitPartitions` coalesces the (now small) fit set so each Lloyd
-    *    round is a handful of tasks, not one task per corpus partition —
-    *    the fit is job-scheduling-bound once the sample fits in memory. */
-  def buildIvfKMeans(emb: DataFrame, numCentroids: Int = 32,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      maxIter: Int = 20, fitFraction: Double = 1.0,
-      fitPartitions: Int = 4): Ivf = {
-    val sampled =
-      if (fitFraction >= 1.0) emb
-      else emb.filter(
-        pmod(xxhash64(col(idCol)), lit(1000000L)) < (fitFraction * 1e6).toLong)
-    val withVec = sampled
-      .select(col(vecCol))
-      .coalesce(fitPartitions)
-      .withColumn("features", array_to_vector(col(vecCol)))
-    // KMeans with cosine distance throws on any zero-norm vector, whereas
-    // the rest of the index (Graft.cosine guard) degrades zero vectors to
-    // 0.0 similarity — so FIT only on nonzero-norm rows (a zero vector
-    // carries no direction to learn from anyway); assignment below still
-    // covers every row.
-    val sqNorm = aggregate(col(vecCol), lit(0.0d),
-      (acc, x) => acc + x.cast("double") * x.cast("double"))
-    // KMeans is multi-pass (init takeSample, countByValue, one pass per
-    // Lloyd round) over an RDD view it does NOT cache — uncached, every
-    // pass re-runs the parquet scan + array→Vector conversion (MLlib logs
-    // "input data is not directly cached" for exactly this). Materialize
-    // the bounded fit set once; the cost is fitFraction·N vectors, already
-    // sized to fit by the caller's sampling contract.
-    val fitSet = withVec.filter(sqNorm > 0.0d).cache()
-    val model = try {
-      new org.apache.spark.ml.clustering.KMeans()
-        .setK(numCentroids).setSeed(42)
-        .setDistanceMeasure("cosine").setMaxIter(maxIter)
-        // seeded random init: k-means|| costs an extra full pass + driver
-        // sync per init round to spread the FIRST centers well, but Lloyd
-        // with a few iterations converges to density-following centers from
-        // a random start too — and recall/balance are spec-gated, so the
-        // cheaper init is the right trade for a bounded-C index
-        .setInitMode("random")
-        .fit(fitSet)
-    } finally fitSet.unpersist(blocking = false)
-    // centers arrive as double Vectors; the index stores array<float> like
-    // the data so the codegen cosine kernel applies unchanged
-    val centers = model.clusterCenters.toSeq.zipWithIndex.map { case (v, i) =>
-      (i.toLong, v.toArray.map(_.toFloat)) }
-    val centroids = emb.sparkSession.createDataFrame(centers)
-      .toDF("centroid_id", "cvec")
-    assignToCentroids(emb, centroids, idCol, vecCol)
-  }
-
-  /** LEARNED coarse centroids via a DataFrame-native cosine Lloyd —
-    * [[buildIvfKMeans]]'s objective in the fused execution shape
-    * ([[buildPqCodebookLloyd]]'s rationale applied to the coarse
+    * Execution shape ([[buildPqCodebookLloyd]]'s, applied to the coarse
     * quantizer): each round is ONE pure-map job — the assignment rides
     * the native codegen [[pqEncode]] expression with an m=1, ksub=C
     * codebook of UNIT-NORMALIZED centers (for unit centers,
@@ -235,43 +173,36 @@ object Ann {
     * centers stay raw means (only the per-round encode view normalizes);
     * empty clusters keep their previous center; zero-norm rows are
     * excluded from the fit (the cosine guard scores them 0 against
-    * everything — no direction to learn), matching
-    * [[buildIvfKMeans]]'s contract. The byte-code assignment caps the
-    * fused form at C ≤ 256 coarse centroids; larger coarse books (the
-    * 100 TB regime) stay on [[buildIvfKMeans]]'s KMeans||.
+    * everything — no direction to learn) but still assigned. The
+    * byte-code assignment caps C at 256 coarse centroids.
     *
     * Init = the salted-md5 deterministic row sample (round 0 equals a
     * [[buildIvf]]-style sample pick; each Lloyd round only improves it).
-    * Jobs: checkpoint + init + maxIter, independent of C — measured
-    * ~0.45 s warm vs MLlib's ~0.95 s at sf0.1/C=32. Quality is gated the
-    * same way as the MLlib path: recall + bucket balance specs, floors
-    * re-measured (RecallProbe r10). */
+    * The fit set is coalesced to 4 partitions and checkpointed once, so
+    * each round is a handful of tasks. Jobs: checkpoint + init +
+    * maxIter, independent of C — measured ~0.45 s warm at sf0.1/C=32.
+    * Only the C centers (C·dim floats) reach the driver. */
   def buildIvfKMeansLloyd(emb: DataFrame, numCentroids: Int = 32,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxIter: Int = 5, fitFraction: Double = 1.0,
-      fitPartitions: Int = 4, salt: String = "coarse:"): Ivf = {
-    val sampled =
-      if (fitFraction >= 1.0) emb
-      else emb.filter(
-        pmod(xxhash64(col(idCol)), lit(1000000L)) < (fitFraction * 1e6).toLong)
+      maxIter: Int = 5): Ivf = {
+    require(numCentroids <= 256, "the coarse fit encodes assignments as " +
+      s"byte codes: C=$numCentroids > 256")
     val sqNorm = aggregate(col(vecCol), lit(0.0d),
       (acc, x) => acc + x.cast("double") * x.cast("double"))
-    val fit = sampled
+    val fit = emb
       .filter(sqNorm > 0.0d)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .coalesce(fitPartitions)
+      .coalesce(4)
       .localCheckpoint(true)
     val centroids = try {
       var centers: Array[Array[Float]] = fit
-        .orderBy(md5(concat(lit(salt), col("id").cast("string"))), col("id"))
+        .orderBy(md5(concat(lit("coarse:"), col("id").cast("string"))),
+          col("id"))
         .limit(numCentroids)
         .select(col("v")).collect()
         .map(_.getSeq[Float](0).toArray)
       require(centers.length == numCentroids,
         s"fit set smaller than numCentroids=$numCentroids")
-      require(numCentroids <= 256,
-        s"fused coarse fit encodes assignments as byte codes: C=$numCentroids" +
-          " > 256 — use buildIvfKMeans for larger coarse books")
       for (_ <- 1 to maxIter) {
         val unit = centers.map { v =>
           val n = math.sqrt(v.map(x => x.toDouble * x).sum)
@@ -690,7 +621,7 @@ object Ann {
     * IVFPQ): split the vector into `m` subspaces and learn `ksub` entries
     * per subspace. Entries here are the subvectors of the `ksub`
     * md5-smallest rows — the same deterministic bounded sample as
-    * [[buildIvf]] (a per-subspace k-means fit drops in unchanged). Only
+    * [[buildIvf]] ([[buildPqCodebookLloyd]] is the learned alternative). Only
     * `ksub` rows ever reach the driver; the codebook is `m·ksub·dsub`
     * floats, broadcast as a literal into codegen'd HOF expressions.
     * Returns `[m][ksub][dsub]`. */
@@ -719,64 +650,18 @@ object Ann {
       sample.toSeq.map(v => v.slice(j * dsub, (j + 1) * dsub).toSeq))
   }
 
-  /** LEARNED PQ codebooks: one seeded k-means per subspace (Jégou 2011
-    * §III trains exactly this — k-means on the subvectors, L2), replacing
+  /** LEARNED PQ codebooks: per-subspace k-means on the subvectors,
+    * squared L2 (Jégou 2011 §III trains exactly this), replacing
     * [[buildPqCodebook]]'s md5-sample entries. Sampled entries are real
     * data points, so sparse regions of a subspace get no representative
     * and dense ones get many identical-ish entries; Lloyd iterations
     * spread the `ksub` entries by the subspace's own density, cutting
     * per-subspace quantization error and raising ADC ranking quality at
     * the SAME index size. The md5 sample stays the oracle default; this
-    * is the quality path, recall-gated (same split as [[buildIvfKMeans]]
-    * vs [[buildIvf]]).
+    * is the quality path, recall-gated (same split as
+    * [[buildIvfKMeansLloyd]] vs [[buildIvf]]).
     *
-    * Scale shape, same bounds as [[buildIvfKMeans]]:
-    *  - the fit set is a deterministic `fitFraction` hash slice, sliced
-    *    ONCE into all m subvector columns, coalesced small and cached —
-    *    one materialization feeds every subspace fit;
-    *  - the m fits run CONCURRENTLY (each is a tiny k-means over
-    *    dsub-dim points; Spark schedules concurrent jobs from separate
-    *    threads) so the wall cost is ~one fit, not m sequential fits —
-    *    at bench scale each Lloyd round is scheduling-bound, and m=16
-    *    sequential fits would pay that latency 16×;
-    *  - only m·ksub·dsub floats (the codebook itself) reach the driver. */
-  def buildPqCodebookKMeans(emb: DataFrame, m: Int, ksub: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      maxIter: Int = 10, fitFraction: Double = 1.0,
-      fitPartitions: Int = 4): Seq[Seq[Seq[Float]]] = {
-    require(ksub <= 256, s"ksub=$ksub exceeds what a byte code can index")
-    val dim = emb.select(size(col(vecCol))).head().getInt(0)
-    require(dim % m == 0, s"embedding dim $dim is not divisible by m=$m")
-    val dsub = dim / m
-    val sampled =
-      if (fitFraction >= 1.0) emb
-      else emb.filter(
-        pmod(xxhash64(col(idCol)), lit(1000000L)) < (fitFraction * 1e6).toLong)
-    val fitSet = sampled
-      .select((0 until m).map(j =>
-        array_to_vector(slice(col(vecCol), lit(j * dsub + 1), lit(dsub)))
-          .as(s"f$j")): _*)
-      .coalesce(fitPartitions)
-      .cache()
-    try {
-      fitSet.count() // materialize ONCE before the concurrent fits race
-      // shared cached action pool (r14 verdict #8)
-      Graft.inParallelSeq((0 until m).map(j => () =>
-        new org.apache.spark.ml.clustering.KMeans()
-          .setK(ksub).setSeed(42L + j).setMaxIter(maxIter)
-          .setInitMode("random").setFeaturesCol(s"f$j")
-          .fit(fitSet)
-          .clusterCenters.toSeq.map(_.toArray.map(_.toFloat).toSeq)))
-    } finally fitSet.unpersist(blocking = false)
-  }
-
-  /** LEARNED PQ codebooks, all `m` subspace fits FUSED into one plan per
-    * Lloyd round — same objective as [[buildPqCodebookKMeans]] (per-
-    * subspace k-means on the subvectors, squared L2, Jégou 2011 §III) but
-    * a different execution shape: instead of m concurrent MLlib fits
-    * (each init + maxIter rounds = its own job chain; ~7·m tiny jobs
-    * serialized through one DAGScheduler — measured a 1.4 s floor at
-    * sf0.1 for m=16, pure scheduling), every round here is ONE job whose
+    * All `m` subspace fits are FUSED into one plan per Lloyd round, whose
     * assignment step IS the production encoder:
     *
     *  - assignment: the native whole-stage-codegen [[pqEncode]] pass
@@ -786,41 +671,37 @@ object Ann {
     *  - update: `posexplode` the vector, recover `(j = pos / dsub,
     *    p = pos mod dsub, c = codes[j])`, one hash-agg `avg` over the
     *    m·ksub·dsub bounded groups; empty clusters keep their previous
-    *    center (the MLlib convention).
+    *    center.
     *
     * Init is the salted-md5 deterministic row sample sliced into every
     * subspace ([[buildPqCodebook]]'s exact convention — so iteration 0
     * equals the sample codebook and each round only improves it).
-    * Total jobs: checkpoint + init + maxIter — independent of m.
-    * Learned-center quality is spec-gated (plain-Scala Lloyd reference +
-    * reconstruction-MSE vs the sample codebook) and the composed index
-    * recall-gated, like every learned tier.
+    * Total jobs: checkpoint + init + maxIter — independent of m (m
+    * separate per-subspace fits measured a 1.4 s scheduling floor at
+    * sf0.1 for m=16). Learned-center quality is spec-gated (plain-Scala
+    * Lloyd reference + reconstruction-MSE vs the sample codebook) and the
+    * composed index recall-gated, like every learned tier.
     *
-    * Scale shape: the fit set is a bounded hash slice (`fitFraction`)
+    * Scale shape: the fit set is coalesced to 4 partitions and
     * materialized once; each round scans it with codegen map work and
-    * shuffles only the m·ksub·dsub partial means. The collect is the
-    * codebook itself (bounded), exactly the [[buildPqCodebookKMeans]]
-    * boundary. */
+    * shuffles only the m·ksub·dsub partial means. Only the codebook
+    * itself (m·ksub·dsub floats) reaches the driver. */
   def buildPqCodebookLloyd(emb: DataFrame, m: Int, ksub: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxIter: Int = 5, fitFraction: Double = 1.0,
-      fitPartitions: Int = 4, salt: String = "lloyd:"): Seq[Seq[Seq[Float]]] = {
+      maxIter: Int = 5): Seq[Seq[Seq[Float]]] = {
     require(ksub <= 256, s"ksub=$ksub exceeds what a byte code can index")
-    val sampled =
-      if (fitFraction >= 1.0) emb
-      else emb.filter(
-        pmod(xxhash64(col(idCol)), lit(1000000L)) < (fitFraction * 1e6).toLong)
-    // materialize the bounded fit slice once; init + every round read it.
-    // The dim probe reads the CHECKPOINTED slice — probing `emb` first
+    // materialize the fit set once; init + every round read it.
+    // The dim probe reads the CHECKPOINTED set — probing `emb` first
     // would run the upstream plan (a full residual-assignment pass in the
     // IVFADC composition) for a single head() row.
-    val fit = sampled
+    val fit = emb
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .coalesce(fitPartitions)
+      .coalesce(4)
       .localCheckpoint(true)
     try {
       val sample = fit
-        .orderBy(md5(concat(lit(salt), col("id").cast("string"))), col("id"))
+        .orderBy(md5(concat(lit("lloyd:"), col("id").cast("string"))),
+          col("id"))
         .limit(ksub)
         .select(col("v")).collect()
         .map(_.getSeq[Float](0).toIndexedSeq)
@@ -935,8 +816,8 @@ object Ann {
         buildPqCodebook(_, _, _, _, _, salt = "pq:"))
       : (Ivf, DataFrame, Seq[Seq[Seq[Float]]]) = {
     // both quantizers are pluggable: the md5-sample defaults keep the
-    // oracle-reproducible build, while passing buildIvfKMeans /
-    // buildPqCodebookKMeans composes the learned quality path into the
+    // oracle-reproducible build, while passing buildIvfKMeansLloyd /
+    // buildPqCodebookLloyd composes the learned quality path into the
     // same IVFADC layout (recall-gated instead of hash-matched). The
     // default codebook sample is SALTED — see buildPqCodebook: unsalted it
     // would sample the coarse-centroid rows themselves, whose residuals
@@ -945,8 +826,8 @@ object Ann {
     // the ENCODE pass reads a materialized residual relation (eager
     // localCheckpoint) so it never re-runs the N·C assignment join; the
     // codebook FIT takes its own residual view and runs CONCURRENTLY with
-    // that materialization (the fit bounds its input itself — hash-slice
-    // sample, coalesce, cache — so the only duplicated work is one
+    // that materialization (the fit bounds its input itself — coalesce,
+    // checkpoint — so the only duplicated work is one
     // assignment pass, paid in parallel instead of serially; r9 verdict:
     // the fit was serialized behind the checkpoint for no dependency
     // reason). The coarse → residual dependency itself is real (true

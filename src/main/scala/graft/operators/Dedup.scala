@@ -1356,7 +1356,7 @@ object Dedup {
     *
     *  1. coarse-cluster the embeddings ([[Ann.buildIvf]]'s deterministic
     *     md5-sample centroids, so the whole pipeline has a DuckDB twin;
-    *     [[Ann.buildIvfKMeans]] drops in for the quality path),
+    *     [[Ann.buildIvfKMeansLloyd]] drops in for the quality path),
     *  2. generate candidate pairs ONLY within a cluster (the paper's point:
     *     the pair stage is Σ bucket² instead of N² — at 100 TB the
     *     clusters bound the quadratic term, and the self-join is

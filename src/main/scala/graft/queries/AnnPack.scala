@@ -165,7 +165,7 @@ object AnnPack extends QueryPack {
         .orderBy(col("qid"))
     }),
 
-    // LEARNED-centroid IVF (seeded KMeans, cosine): the quality path's
+    // LEARNED-centroid IVF (cosine Lloyd k-means): the quality path's
     // build + probe cost, benched alongside the md5-sample IVF. Graded as
     // recall vs the exact top-10 — KMeans float reduction order is not
     // hash-stable across engines, the recall gate boolean is (same grading
@@ -176,9 +176,8 @@ object AnnPack extends QueryPack {
       val q = e.filter(col("vec_id") === 0)
         .select(lit(0L).as("qid"), col("embedding").as("qvec"))
       // fused-Lloyd coarse fit (one job per round — the
-      // buildPqCodebookLloyd shape on the coarse quantizer; MLlib path
-      // kept as buildIvfKMeans, spec-compared): maxIter 5, recall gated
-      // below either way. The recall gate's exact side is independent
+      // buildPqCodebookLloyd shape on the coarse quantizer): maxIter 5,
+      // recall gated below. The recall gate's exact side is independent
       // of the fit — materialize it concurrently with the Lloyd chain
       // (r21; the ann_ivfpq_kmeans_topk shape) instead of serializing
       // the corpus scan behind 7 sequential fit round trips
@@ -188,9 +187,9 @@ object AnnPack extends QueryPack {
       val ann = Ann.searchIvf(ivf, q.select(col("qvec")), nprobe = 4, k = 10)
         .select(lit(0L).as("qid"), col("vec_id"))
       // measured fixture recall 7/10 at sf0.01, 10/10 at sf0.1
-      // (RecallProbe r10; the MLlib fit measured 6/10 and 4/10). Floor
-      // kept at the historical 0.3 — k-means determinism is partition-
-      // layout-dependent, so the floor stays well under the measurement
+      // (RecallProbe r10). Floor kept at the historical 0.3 — k-means
+      // determinism is partition-layout-dependent, so the floor stays
+      // well under the measurement
       // (r8 advisory; same slack convention as the LSH gates)
       Ann.recallVsExact(exact, ann, k = 10, minRecall = 0.3)
     }),
@@ -448,10 +447,8 @@ object AnnPack extends QueryPack {
       val e = Tables.load(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0)
         .select(lit(0L).as("qid"), col("embedding").as("qvec"))
-      // fused-Lloyd execution of the same per-subspace k-means objective:
-      // one codegen encode pass per round instead of m concurrent MLlib
-      // fits (measured 0.9 s vs 2.2 s warm at sf0.1, identical recall —
-      // RecallProbe r10)
+      // fused-Lloyd per-subspace k-means: one codegen encode pass per
+      // round for all m subspaces
       val cb = Ann.buildPqCodebookLloyd(e, m = 16, ksub = 32, maxIter = 5)
       val ann = Ann.searchPq(e, Ann.pqEncode(e, cb), cb,
           q.select(col("qvec")), k = 10, overfetch = 6)
@@ -570,9 +567,8 @@ object AnnPack extends QueryPack {
         .select(lit(0L).as("qid"), col("vec_id"))
       // residual (IVFADC) encoding + cosine-metric IP ADC: measured
       // fixture recall 8/10 (sf0.01) and 9/10 (sf0.1) with both fused-
-      // Lloyd quantizers — RecallProbe r10 (the MLlib-coarse composition
-      // measured 8/10 and 7/10). The floor leaves slack UNDER the
-      // measured value: KMeans determinism holds only for a fixed
+      // Lloyd quantizers — RecallProbe r10. The floor leaves slack UNDER
+      // the measured value: KMeans determinism holds only for a fixed
       // partition layout, so an environment change (core count, split
       // size) may move hits
       // without any real index regression (r8 advisory)

@@ -9,29 +9,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * original cause. */
 class ActionPoolSpec extends AnyFunSuite {
 
-  test("inParallel overlaps its two thunks and inParallelSeq its batch") {
+  test("inParallel overlaps its two thunks") {
     val t0 = System.nanoTime()
     val (a, b) = Graft.inParallel({ Thread.sleep(400); 1 },
       { Thread.sleep(400); 2 })
     val dt = (System.nanoTime() - t0) / 1e6
     assert((a, b) == (1, 2))
     assert(dt < 750, s"pair did not overlap: $dt ms")
-    val t1 = System.nanoTime()
-    val xs = Graft.inParallelSeq((1 to 8).map(i => () => {
-      Thread.sleep(300); i * i
-    }))
-    val dt1 = (System.nanoTime() - t1) / 1e6
-    assert(xs == (1 to 8).map(i => i * i))
-    assert(dt1 < 1800, s"batch did not overlap: $dt1 ms")
   }
 
   test("nested composition cannot deadlock: an inParallel whose thunks " +
-      "each run their own inParallelSeq completes") {
-    val (x, y) = Graft.inParallel(
-      Graft.inParallelSeq(Seq(() => { Thread.sleep(100); 1 },
-        () => { Thread.sleep(100); 2 })).sum,
-      Graft.inParallelSeq(Seq(() => { Thread.sleep(100); 3 },
-        () => { Thread.sleep(100); 4 })).sum)
+      "each run their own inParallel completes") {
+    def pair(x: Int, y: Int): Int = {
+      val (a, b) = Graft.inParallel({ Thread.sleep(100); x },
+        { Thread.sleep(100); y })
+      a + b
+    }
+    val (x, y) = Graft.inParallel(pair(1, 2), pair(3, 4))
     assert((x, y) == (3, 7))
   }
 
@@ -40,10 +34,5 @@ class ActionPoolSpec extends AnyFunSuite {
       Graft.inParallel({ throw new IllegalStateException("boom"); 1 }, 2)
     }
     assert(boom.getMessage == "boom")
-    val boom2 = intercept[IllegalStateException] {
-      Graft.inParallelSeq(Seq(() => 1,
-        () => throw new IllegalStateException("boom2")))
-    }
-    assert(boom2.getMessage == "boom2")
   }
 }

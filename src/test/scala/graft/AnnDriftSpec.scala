@@ -28,7 +28,7 @@ class AnnDriftSpec extends AnyFunSuite {
     val base = ((1 to 20).map(i => (i.toLong, vec(10 + 0.01 * i, 0, 0))) ++
       (21 to 40).map(i => (i.toLong, vec(-10 - 0.01 * i, 0, 0))))
       .toDF("vec_id", "embedding")
-    val ivf0 = Ann.buildIvfKMeans(base, numCentroids = 2, maxIter = 10)
+    val ivf0 = Ann.buildIvfKMeansLloyd(base, numCentroids = 2, maxIter = 10)
     val s0 = Ann.driftStats(ivf0).head
     val baseline = s0.getDouble(1)
     assert(baseline > 0.95, s"tight clusters must quantize well: $s0")
@@ -65,7 +65,8 @@ class AnnDriftSpec extends AnyFunSuite {
     val before = recall(ivf1)
     assert(before <= 0.7, s"bisector cluster must split: recall $before")
     // retrain on the live corpus (the documented policy) and re-check
-    val retrained = Ann.buildIvfKMeans(live, numCentroids = 3, maxIter = 10)
+    val retrained = Ann.buildIvfKMeansLloyd(live, numCentroids = 3,
+      maxIter = 10)
     val after = recall(retrained)
     assert(after >= 0.9, s"retrain must restore recall: $before -> $after")
     // the retrained quantizer fits the LIVE corpus better than the

@@ -68,24 +68,35 @@ class ReportedCountsSpec extends AnyFunSuite {
       "not a git checkout — freshness check skipped")
     assume(Files.exists(repoRoot.resolve("scale_probe.json")),
       "no committed scale-gate artifact")
-    // an artifact with uncommitted modifications is mid-refresh — the
-    // ordering contract applies to COMMITTED states
-    val dirty = git("status", "--porcelain", "--", "scale_probe.json")
-    if (dirty.exists(_.nonEmpty)) cancel("scale_probe.json refresh in flight")
-    val artifact = git("log", "-1", "--format=%H", "--", "scale_probe.json")
-      .filter(_.nonEmpty)
-    assert(artifact.nonEmpty, "scale_probe.json is not tracked by git")
-    val surface = git(("log" +: "-1" +: "--format=%H" +: "--" +:
-      ScaleProbe.coveredSources): _*).filter(_.nonEmpty)
-    assert(surface.nonEmpty, "no commit touches the covered surface?")
-    val fresh = git("merge-base", "--is-ancestor",
-      surface.get, artifact.get).isDefined
-    assert(fresh,
-      s"scale_probe.json was last committed at ${artifact.get.take(12)}, " +
-        s"but probe-covered surface changed later at " +
-        s"${surface.get.take(12)} — re-run graft.ScaleProbe (subset via " +
-        "SPARK_GRAFT_SCALE_ONLY + merge, or the full gate) and commit " +
-        "the refreshed artifact")
+    // uncommitted edits land in the next commit, after every existing
+    // one: a covered source edited in the working tree must have its
+    // artifact refresh pending beside it, and a pending refresh is newer
+    // than any committed surface
+    def pending(paths: Seq[String]): Seq[String] =
+      git(("status" +: "--porcelain" +: "--" +: paths): _*)
+        .getOrElse("").linesIterator.filter(_.nonEmpty).toSeq
+    val artifactPending = pending(Seq("scale_probe.json")).nonEmpty
+    val surfacePending = pending(ScaleProbe.coveredSources)
+    assert(artifactPending || surfacePending.isEmpty,
+      s"probe-covered surface has uncommitted changes " +
+        s"(${surfacePending.mkString("; ")}) but scale_probe.json does " +
+        "not — re-run graft.ScaleProbe and refresh the artifact")
+    if (!artifactPending) {
+      val artifact = git("log", "-1", "--format=%H", "--", "scale_probe.json")
+        .filter(_.nonEmpty)
+      assert(artifact.nonEmpty, "scale_probe.json is not tracked by git")
+      val surface = git(("log" +: "-1" +: "--format=%H" +: "--" +:
+        ScaleProbe.coveredSources): _*).filter(_.nonEmpty)
+      assert(surface.nonEmpty, "no commit touches the covered surface?")
+      val fresh = git("merge-base", "--is-ancestor",
+        surface.get, artifact.get).isDefined
+      assert(fresh,
+        s"scale_probe.json was last committed at ${artifact.get.take(12)}, " +
+          s"but probe-covered surface changed later at " +
+          s"${surface.get.take(12)} — re-run graft.ScaleProbe (subset via " +
+          "SPARK_GRAFT_SCALE_ONLY + merge, or the full gate) and commit " +
+          "the refreshed artifact")
+    }
   }
 
   test("every closing-bench number SURVEY quotes exists, verbatim, in " +
