@@ -3,10 +3,12 @@ package graft.operators
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Graft
+import graft.functions.CosineSimilarity
 
 /** Approximate nearest-neighbor paths for embedding search at scale.
   *
@@ -32,7 +34,9 @@ object Ann {
     * the assignments. `None` ⇒ no pending deletes, zero plan overhead
     * (the common case). The quantizer (centroids) is FROZEN across
     * deletes, same as across [[appendIvf]] — FAISS remove_ids
-    * semantics: posting lists shrink, the coarse geometry doesn't. */
+    * semantics: posting lists shrink, the coarse geometry doesn't.
+    * `centroids` (C rows) is a driver-local relation after [[loadIvf]]
+    * and [[buildIvfKMeansLloyd]]; [[searchIvf]] ranks it on the driver. */
   case class Ivf(assignments: DataFrame, centroids: DataFrame,
       tombs: Option[DataFrame] = None)
 
@@ -252,7 +256,7 @@ object Ann {
     * construction (per-row assignment against a fixed centroid set):
     * appending b1 then b2 ≡ appending b1 ∪ b2 — spec-pinned. The union
     * keeps each side's centroid-clustered partitions (union is narrow),
-    * so the probe's semi-join prune still skips whole partitions. */
+    * and a reload's partition filter still skips whole files. */
   def appendIvf(ivf: Ivf, newEmb: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Ivf = {
     val add = assignToCentroids(newEmb, ivf.centroids, idCol, vecCol)
@@ -308,13 +312,15 @@ object Ann {
 
   /** Persist an [[Ivf]] so build-once/query-many and ingestion loops
     * ([[appendIvf]]) survive process restarts: assignments are written
-    * `partitionBy(centroid_id)` — on reload the probe's semi-join prunes
-    * whole FILES, the on-disk form of the nprobe/C scan bound
-    * (spec-asserted in ScaleSpec for exactly this layout). */
+    * `partitionBy(centroid_id)` — on reload [[searchIvf]]'s literal
+    * `centroid_id IN (…)` is a static partition filter that prunes whole
+    * FILES, the on-disk form of the nprobe/C scan bound (ScaleSpec runs
+    * `searchIvf` on this layout and asserts the prune). */
   def saveIvf(ivf: Ivf, dir: String): Unit = {
     ivf.assignments.write.mode("overwrite")
       .partitionBy("centroid_id").parquet(s"$dir/assignments")
-    ivf.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    // C rows, usually a driver-local relation: one file, not one per slice
+    ivf.centroids.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
     saveIvfTombstones(ivf, dir)
   }
 
@@ -331,14 +337,20 @@ object Ann {
   }
 
   /** Reload a [[saveIvf]] directory. Partition-column values come back as
-    * the inferred integer type, so centroid_id is re-widened to long. */
+    * the inferred integer type, so centroid_id is re-widened to long. The
+    * C centroid rows are collected once here and come back as a
+    * driver-local relation, so [[searchIvf]]'s centroid ranking reads
+    * them without a job (C ≤ 256 bounds the collect). */
   def loadIvf(spark: org.apache.spark.sql.SparkSession, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Ivf = {
     val assignments = spark.read.parquet(s"$dir/assignments")
       .select(col(idCol), col(vecCol), col("centroid_id").cast("long"))
+    val stored = spark.read.parquet(s"$dir/centroids")
+    val centroids = spark.createDataFrame(
+      java.util.Arrays.asList(stored.collect(): _*), stored.schema)
     val tombsPath = new org.apache.hadoop.fs.Path(s"$dir/tombs")
     val fs = tombsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Ivf(assignments, spark.read.parquet(s"$dir/centroids"),
+    Ivf(assignments, centroids,
       if (fs.exists(tombsPath)) Some(spark.read.parquet(s"$dir/tombs"))
       else None)
   }
@@ -374,19 +386,50 @@ object Ann {
     (ivf, index, cb)
   }
 
-  /** Probe the nprobe nearest centroid buckets, brute-force within them. */
+  /** Single-query IVF search: probe the nprobe nearest centroid buckets,
+    * brute-force within them, keep the top k as `(vec_id, simil)`.
+    *
+    * `queryVec` must hold exactly one non-null `qvec` row. The query and
+    * the C centroids are read to the driver (no job when both are local
+    * relations, as after [[loadIvf]]) and the centroids are ranked there
+    * in the plan's own order: [[CosineSimilarity.of]] descending under
+    * Spark's double order (NaN largest, a null `cvec` last), then
+    * `centroid_id` ascending. The probed ids reach the assignment scan as
+    * a literal `centroid_id IN (…)`, which on a [[saveIvf]] layout is a
+    * static partition filter, so the search is ONE job that reads only
+    * the probed buckets' files (plus the tombstone broadcast while
+    * deletes are pending). ScaleSpec pins the job count and the prune. */
   def searchIvf(ivf: Ivf, queryVec: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val probed = ivf.centroids.crossJoin(broadcast(queryVec))
-      .select(col("centroid_id"), Graft.cosine(col("cvec"), col("qvec")).as("cs"))
-      .orderBy(col("cs").desc, col("centroid_id"))
-      .limit(nprobe)
-      .select(col("centroid_id"))
+    val qs = queryVec.select(col("qvec")).limit(2).collect()
+    require(qs.length == 1 && !qs(0).isNullAt(0),
+      s"searchIvf takes one non-null qvec row, got ${qs.length} row(s)" +
+        (if (qs.length == 1) " with a null qvec" else ""))
+    val q = qs(0).getSeq[Float](0).toArray
+    val probed = ivf.centroids.select(col("centroid_id"), col("cvec"))
+      .collect()
+      .map(r => (r.get(0), if (r.isNullAt(1)) None
+        else Some(CosineSimilarity.of(r.getSeq[Float](1).toArray, q))))
+      .sorted(probeOrder)
+      .take(nprobe).map(_._1)
     liveAssignments(ivf)
-      .join(broadcast(probed), Seq("centroid_id"), "left_semi")
-      .crossJoin(broadcast(queryVec))
-      .select(col("vec_id"), Graft.cosine(col("embedding"), col("qvec")).as("simil"))
+      .filter(col("centroid_id").isin(probed.toIndexedSeq: _*))
+      .select(col("vec_id"), Graft.cosine(col("embedding"), typedLit(q)).as("simil"))
       .orderBy(col("simil").desc, col("vec_id"))
       .limit(k)
+  }
+
+  /** `ORDER BY cs DESC, centroid_id` on driver `(centroid_id, cs)` pairs:
+    * Spark's double order descending (NaN largest, −0.0 = 0.0, a null cs
+    * last), then the id ascending (both builders assign non-null ids). */
+  private val probeOrder: Ordering[(Any, Option[Double])] = (a, b) => {
+    val byCs = (a._2, b._2) match {
+      case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+      case (Some(_), None) => -1
+      case (None, Some(_)) => 1
+      case _ => 0
+    }
+    if (byCs != 0) byCs
+    else a._1.asInstanceOf[Comparable[Any]].compareTo(b._1)
   }
 
   /** Batch IVF: one plan answers a whole query SET — the IVF twin of

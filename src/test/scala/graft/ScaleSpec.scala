@@ -10,29 +10,76 @@ class ScaleSpec extends AnyFunSuite {
 
   test("IVF assignments written partitionBy(centroid_id) partition-prune " +
       "probe reads to the probed buckets") {
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
     val e = Tables.load(spark, TestSpark.sfDir, "embeddings")
-    val ivf = Ann.buildIvf(e)
-    ivf.assignments.write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(s"$dir/ivf")
-    val stored = spark.read.parquet(s"$dir/ivf")
-    val probeIds = ivf.centroids.select("centroid_id")
-      .limit(2).collect().map(_.getLong(0)).toSeq
-    val probed = stored.filter(col("centroid_id").isin(probeIds: _*))
-    // the probe filter reaches the scan as a PARTITION filter — only the
-    // probed directories are listed/read, the 100 TB prune contract
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("centroid_id"),
-      s"expected a partition filter in:\n$plan")
-    val filesProbed = probed.select(input_file_name()).distinct().count()
-    val filesTotal = stored.select(input_file_name()).distinct().count()
-    assert(filesProbed < filesTotal,
-      s"probe read $filesProbed of $filesTotal files — no pruning")
-    // and the pruned read returns exactly the probed buckets' rows
-    val expected = ivf.assignments
-      .filter(col("centroid_id").isin(probeIds: _*))
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(probed.select("vec_id").collect().map(_.getLong(0)).toSet == expected)
+    Ann.saveIvf(Ann.buildIvf(e), dir)
+    val ivf = Ann.loadIvf(spark, dir)
+    val qv = e.filter(col("vec_id") === 0).select(col("embedding")).head
+      .getSeq[Float](0)
+    val q = Seq(Tuple1(qv)).toDF("qvec")
+    val probeIds = ivf.centroids.crossJoin(q)
+      .select(col("centroid_id"), Graft.cosine(col("cvec"), col("qvec")).as("cs"))
+      .orderBy(col("cs").desc, col("centroid_id")).limit(2)
+      .collect().map(_.getLong(0)).toSeq
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val group = "ivf-prune"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    // searches on the loaded index: the query and the centroids are local
+    // relations, so ranking and reading them starts no job
+    def search(v: Ann.Ivf) = {
+      jobs.set(0)
+      sc.setJobGroup(group, "searchIvf")
+      try {
+        val hits = Ann.searchIvf(v, q, nprobe = 2, k = 10)
+        (hits, hits.collect().map(_.getLong(0)).toSeq)
+      } finally {
+        sc.clearJobGroup()
+        org.apache.spark.graftutil.BusDrain.waitUntilEmpty(sc, 10000)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (hits, ids) = search(ivf)
+      assert(jobs.get() == 1, s"${jobs.get()} jobs for one search")
+      // the probe reaches the scan as a PARTITION filter — only the
+      // probed directories are listed/read, the 100 TB prune contract
+      val plan = hits.queryExecution.executedPlan
+      val text = plan.toString
+      assert("PartitionFilters: \\[[^\\]]*centroid_id[^\\]]* IN ".r
+        .findFirstIn(text).nonEmpty, s"expected a partition filter in:\n$text")
+      assert(!text.contains("BroadcastExchange"), text)
+      val filesRead = new org.apache.spark.sql.execution.adaptive
+          .AdaptiveSparkPlanHelper {}.collect(plan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metrics("numFiles").value }.sum
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir,
+          "assignments")).toArray.map(_.toString)
+        .filter(f => f.endsWith(".parquet"))
+      val probedFiles = files.count(f => probeIds.exists(c =>
+        f.contains(s"/centroid_id=$c/")))
+      assert(filesRead == probedFiles && filesRead < files.length,
+        s"search read $filesRead of ${files.length} files, " +
+          s"$probedFiles in the probed buckets")
+      // and the pruned read returns the probed buckets' top rows
+      val expected = ivf.assignments
+        .filter(col("centroid_id").isin(probeIds: _*))
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      assert(ids.nonEmpty && ids.size == math.min(10, expected.size) &&
+        ids.forall(expected))
+      // pending tombstones add exactly their broadcast
+      val tombed = Ann.deleteFromIvf(ivf, Seq(ids.head).toDF("vec_id"))
+      val (_, live) = search(tombed)
+      assert(jobs.get() == 2, s"${jobs.get()} jobs for a tombstoned search")
+      assert(!live.contains(ids.head))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("filters and column pruning reach the parquet scan (regression " +
