@@ -29,30 +29,54 @@ object Ann {
 
   /** IVF index: (assignments: vec_id→centroid_id, centroids, pending
     * delete tombstones). `tombs` (one id column, named as the index's
-    * id column) is recorded by [[deleteFromIvf]] and anti-joined out of
-    * every search's candidate scan; [[compactIvf]] folds the debt into
-    * the assignments. `None` ⇒ no pending deletes, zero plan overhead
+    * id column) is recorded by [[deleteFromIvf]] and applied to every
+    * search's candidate scan; [[compactIvf]] folds the debt into the
+    * assignments. `None` ⇒ no pending deletes, zero plan overhead
     * (the common case). The quantizer (centroids) is FROZEN across
     * deletes, same as across [[appendIvf]] — FAISS remove_ids
     * semantics: posting lists shrink, the coarse geometry doesn't.
     * `centroids` (C rows) is a driver-local relation after [[loadIvf]]
-    * and [[buildIvfKMeansLloyd]]; [[searchIvf]] ranks it on the driver. */
+    * and [[buildIvfKMeansLloyd]].
+    *
+    * [[searchIvf]] reads its probe state from two driver memos, each
+    * computed at most once per value: `centroidRows` (ranked on the
+    * driver) and `tombIds` (applied as a literal id filter). Every
+    * operation that changes the index returns a new value ([[appendIvf]],
+    * [[deleteFromIvf]], [[compactIvf]], `copy`), so a memo never goes
+    * stale; [[loadIvf]] forces both. `tombIds` holds the pending ids in
+    * driver memory: compaction bounds their number, and a broadcast
+    * anti-join would collect the same ids to the driver anyway. */
   case class Ivf(assignments: DataFrame, centroids: DataFrame,
-      tombs: Option[DataFrame] = None)
+      tombs: Option[DataFrame] = None) {
+
+    /** `(centroid_id, cvec)` on the driver; a null `cvec` stays null. */
+    private[operators] lazy val centroidRows: Array[(Any, Array[Float])] =
+      centroids.select(col("centroid_id"), col("cvec")).collect()
+        .map(r => (r.get(0),
+          if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+
+    /** The non-null pending tombstone ids (empty without tombstones):
+      * a null id deletes nothing under the anti-join. */
+    private[operators] lazy val tombIds: Array[Any] = tombs.fold(
+      Array.empty[Any])(t => t.select(col(t.columns.head)).collect()
+        .filterNot(_.isNullAt(0)).map(_.get(0)))
+  }
 
   /** Delete vectors from an IVF index by id — work ∝ tombstones (a
     * distinct + union recording the ids; no assignment row moves until
-    * [[compactIvf]]). Every search tier reading this index
-    * ([[searchIvf]]/[[searchIvfBatch]]/[[searchIvfPq]]/
-    * [[searchIvfPqBatch]]) anti-joins the tombstones out of its
-    * candidate scan, so delete-then-search ≡ search of an index whose
-    * posting lists never contained those ids (spec-pinned against the
-    * frozen-quantizer rebuild). Incremental counterpart of the
-    * reference's truncate-and-reload refresh
-    * (/root/reference/camp_vec_save.py:59-79). */
+    * [[compactIvf]]). Null ids are dropped: they match no row, and
+    * recording them would inflate [[ivfTombstoneFraction]]. Every search
+    * tier reading this index ([[searchIvf]]/[[searchIvfBatch]]/
+    * [[searchIvfPq]]/[[searchIvfPqBatch]]) removes the tombstoned ids
+    * from its candidate scan, so delete-then-search ≡ search of an index
+    * whose posting lists never contained those ids (spec-pinned against
+    * the frozen-quantizer rebuild). The returned value is lazy: its first
+    * [[searchIvf]] reads the tombstones to the driver once. Incremental
+    * counterpart of the reference's truncate-and-reload refresh
+    * (`camp_vec_save.py:59-79`). */
   def deleteFromIvf(ivf: Ivf, ids: DataFrame,
       idCol: String = "vec_id"): Ivf = {
-    val t = ids.select(col(idCol)).distinct()
+    val t = ids.select(col(idCol)).filter(col(idCol).isNotNull).distinct()
     // distinct across CALLS too: re-deleting the same ids must not
     // inflate ivfTombstoneFraction and fire spurious compactions
     ivf.copy(tombs =
@@ -71,8 +95,8 @@ object Ann {
     ivf.tombs.fold(rel)(t => rel.join(t, t.columns.toSeq, "left_anti"))
 
   /** Fold pending tombstones into the assignments — the threshold-
-    * triggered maintenance pass (each search pays the anti-join until
-    * compaction). */
+    * triggered maintenance pass (each search filters the pending ids out
+    * of its scan until compaction). */
   def compactIvf(ivf: Ivf): Ivf =
     Ivf(liveAssignments(ivf), ivf.centroids, None)
 
@@ -338,21 +362,26 @@ object Ann {
 
   /** Reload a [[saveIvf]] directory. Partition-column values come back as
     * the inferred integer type, so centroid_id is re-widened to long. The
-    * C centroid rows are collected once here and come back as a
-    * driver-local relation, so [[searchIvf]]'s centroid ranking reads
-    * them without a job (C ≤ 256 bounds the collect). */
+    * C centroid rows and the pending tombstones are each collected once
+    * here and come back as driver-local relations, and both [[Ivf]]
+    * memos are forced, so [[searchIvf]] ranks and filters without a read
+    * of its own: one job per search (C ≤ 256 bounds the centroid collect;
+    * the compaction threshold bounds the tombstones). */
   def loadIvf(spark: org.apache.spark.sql.SparkSession, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Ivf = {
     val assignments = spark.read.parquet(s"$dir/assignments")
       .select(col(idCol), col(vecCol), col("centroid_id").cast("long"))
-    val stored = spark.read.parquet(s"$dir/centroids")
-    val centroids = spark.createDataFrame(
-      java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    def local(path: String) = {
+      val stored = spark.read.parquet(path)
+      spark.createDataFrame(
+        java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    }
     val tombsPath = new org.apache.hadoop.fs.Path(s"$dir/tombs")
     val fs = tombsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Ivf(assignments, centroids,
-      if (fs.exists(tombsPath)) Some(spark.read.parquet(s"$dir/tombs"))
-      else None)
+    val ivf = Ivf(assignments, local(s"$dir/centroids"),
+      if (fs.exists(tombsPath)) Some(local(s"$dir/tombs")) else None)
+    ivf.centroidRows; ivf.tombIds
+    ivf
   }
 
   /** Persist the full IVF-PQ artifact set: coarse index, 16 B/vector codes
@@ -389,30 +418,40 @@ object Ann {
   /** Single-query IVF search: probe the nprobe nearest centroid buckets,
     * brute-force within them, keep the top k as `(vec_id, simil)`.
     *
-    * `queryVec` must hold exactly one non-null `qvec` row. The query and
-    * the C centroids are read to the driver (no job when both are local
-    * relations, as after [[loadIvf]]) and the centroids are ranked there
-    * in the plan's own order: [[CosineSimilarity.of]] descending under
-    * Spark's double order (NaN largest, a null `cvec` last), then
-    * `centroid_id` ascending. The probed ids reach the assignment scan as
-    * a literal `centroid_id IN (…)`, which on a [[saveIvf]] layout is a
-    * static partition filter, so the search is ONE job that reads only
-    * the probed buckets' files (plus the tombstone broadcast while
-    * deletes are pending). ScaleSpec pins the job count and the prune. */
+    * `queryVec` must hold exactly one non-null `qvec` row (no job when it
+    * is a local relation). The centroids come from the index's
+    * `centroidRows` memo and are ranked on the driver in the plan's own
+    * order: [[CosineSimilarity.of]] descending under Spark's double order
+    * (NaN largest, a null `cvec` last), then `centroid_id` ascending. The
+    * probed ids reach the assignment scan as a literal
+    * `centroid_id IN (…)`, which on a [[saveIvf]] layout is a static
+    * partition filter. Pending tombstones (the `tombIds` memo) join the
+    * same scan as `id IS NULL OR NOT id IN (…)` — a hashed `InSet` in the
+    * scan's codegen stage, equal to the left-anti join [[liveAssignments]]
+    * plans (a null id survives it). On a [[loadIvf]] index the search is
+    * therefore ONE job with no broadcast, deletes pending or not, reading
+    * only the probed buckets' files; an in-memory [[deleteFromIvf]] value
+    * pays one tombstone read on its first search. ScaleSpec pins the job
+    * counts and the prune. */
   def searchIvf(ivf: Ivf, queryVec: DataFrame, nprobe: Int, k: Int): DataFrame = {
     val qs = queryVec.select(col("qvec")).limit(2).collect()
     require(qs.length == 1 && !qs(0).isNullAt(0),
       s"searchIvf takes one non-null qvec row, got ${qs.length} row(s)" +
         (if (qs.length == 1) " with a null qvec" else ""))
     val q = qs(0).getSeq[Float](0).toArray
-    val probed = ivf.centroids.select(col("centroid_id"), col("cvec"))
-      .collect()
-      .map(r => (r.get(0), if (r.isNullAt(1)) None
-        else Some(CosineSimilarity.of(r.getSeq[Float](1).toArray, q))))
+    val probed = ivf.centroidRows
+      .map { case (id, v) =>
+        (id, if (v == null) None else Some(CosineSimilarity.of(v, q))) }
       .sorted(probeOrder)
       .take(nprobe).map(_._1)
-    liveAssignments(ivf)
+    val scan = ivf.assignments
       .filter(col("centroid_id").isin(probed.toIndexedSeq: _*))
+    val tombIds = ivf.tombIds
+    val live = if (tombIds.isEmpty) scan else {
+      val id = col(ivf.tombs.get.columns.head)
+      scan.filter(id.isNull || !id.isin(tombIds.toIndexedSeq: _*))
+    }
+    live
       .select(col("vec_id"), Graft.cosine(col("embedding"), typedLit(q)).as("simil"))
       .orderBy(col("simil").desc, col("vec_id"))
       .limit(k)

@@ -183,6 +183,19 @@ class TombstoneSpec extends AnyFunSuite {
     assert(loaded.tombs.nonEmpty && got(loaded) == want)
   }
 
+  test("IVF: a null id in a delete records no tombstone") {
+    val ivf = Ann.buildIvf(Tables.load(spark, TestSpark.sfDir, "embeddings"),
+      numCentroids = 4)
+    val one = Ann.deleteFromIvf(ivf, Seq(Option(7L)).toDF("vec_id"))
+    val withNull = Ann.deleteFromIvf(ivf,
+      Seq(Option(7L), None).toDF("vec_id"))
+    val frac = Ann.ivfTombstoneFraction(one)
+    assert(frac > 0.0 && Ann.ivfTombstoneFraction(withNull) == frac)
+    // and a later null-only delete adds nothing either
+    assert(Ann.ivfTombstoneFraction(Ann.deleteFromIvf(one,
+      Seq(None: Option[Long]).toDF("vec_id"))) == frac)
+  }
+
   test("BM25 index: delete-then-search equals a rebuild on survivors " +
       "EXACTLY — including the df/avgdl statistics, not just the result " +
       "set (the drift a result-side filter would leave)") {
